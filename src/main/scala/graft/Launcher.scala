@@ -179,9 +179,12 @@ object Launcher {
               res.transformDlq.write.mode("append").json(d))
             a.dlqTopicApiErrors.foreach(d =>
               res.apiDlq.write.mode("append").json(d))
+            val transform = res.counters.transform.keys.toSeq.sorted.map(id =>
+              s"$id: ${counterText(res.counters.transformMetrics(id))}")
             println(s"routed=${res.counters.routed} " +
               s"unmatched=${res.counters.unmatchedUris} " +
-              s"readErrors=${res.counters.readErrors}")
+              s"readErrors=${res.counters.readErrors} " +
+              transform.mkString("transform={", ", ", "}"))
           case "streaming" =>
             startStreams(spark, a, configs, opts)
             spark.streams.awaitAnyTermination()
@@ -189,6 +192,17 @@ object Launcher {
         spark.stop()
     }
   }
+
+  /** The A3 transform counters as `n_rows=… n_dlq=…
+    * missing_distinct_id=… ts_parse_errors=…`. */
+  private def counterText(m: Map[String, Long]): String =
+    Seq("n_rows", "n_dlq", "missing_distinct_id", "ts_parse_errors")
+      .map(k => s"$k=${m.getOrElse(k, 0L)}").mkString(" ")
+
+  /** Default streaming counters sink: one line per micro-batch per
+    * config. */
+  private def printCounters(configId: String, m: Map[String, Long]): Unit =
+    println(s"micro-batch config=$configId ${counterText(m)}")
 
   /** Streaming-mode launch: one routed stream per PARQUET config over
     * the shared watch dir, each filtered to the files whose FIRST
@@ -202,7 +216,9 @@ object Launcher {
     * committer dir (observed: FileNotFoundException mid-commit). Read
     * a DLQ dir with `recursiveFileLookup` to see all configs' rows.
     * Returns the started queries; [[main]] awaits them. `poster`
-    * overrides the transport (specs inject a counting poster).
+    * overrides the transport (specs inject a counting poster);
+    * `onCounters` receives each micro-batch's transform counters per
+    * config ([[printCounters]] by default; specs inject a collector).
     * `schema` skips input-schema inference when the caller already
     * knows it — inference batch-reads the watch dir, which at 10^6
     * files is a full extra directory listing before the N stream
@@ -211,7 +227,8 @@ object Launcher {
   def startStreams(spark: SparkSession, a: Args, configs: Seq[SourceConfig],
       opts: graft.compile.ConfigCompiler.Options,
       poster: Option[() => EventPoster] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      onCounters: (String, Map[String, Long]) => Unit = printCounters)
       : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
     val dir = a.inputSubscription.getOrElse(
       sys.error("--input_subscription is required in streaming mode"))
@@ -225,7 +242,8 @@ object Launcher {
         dlq => a.dlqTopicTransformErrors.foreach(d =>
           dlq.write.mode("append").json(s"$d/${cfg.configId}")),
         api => a.dlqTopicApiErrors.foreach(d =>
-          api.write.mode("append").json(s"$d/${cfg.configId}")))
+          api.write.mode("append").json(s"$d/${cfg.configId}")),
+        onCounters = m => onCounters(cfg.configId, m))
         .option("checkpointLocation",
           s"${dir}_graft_ckpt_${cfg.configId}")
         .start()

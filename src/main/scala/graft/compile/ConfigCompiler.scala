@@ -40,7 +40,7 @@ final case class CompiledEvents(df: DataFrame) {
 }
 
 object CompiledEvents {
-  private[compile] val counterAggs: Seq[Column] = Seq(
+  private[graft] val counterAggs: Seq[Column] = Seq(
     count(lit(1)).as("n_rows"),
     count(when(col("error").isNotNull, 1)).as("n_dlq"),
     count(when(col("error").isNull && col("_counters.missing_distinct_id"), 1))

@@ -7,10 +7,10 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.compile.ConfigCompiler
+import graft.compile.{CompiledEvents, ConfigCompiler}
 import graft.config.SourceConfig
 import graft.operators.Router
-import graft.sink.{EventBatchSink, EventPoster}
+import graft.sink.{EventBatchSink, EventPoster, SinkDlqRecord}
 
 /** Batch backfill pipeline — `run_batch()` (`M/main_batch.py:431-503`)
   * re-expressed Spark-first:
@@ -24,6 +24,15 @@ import graft.sink.{EventBatchSink, EventPoster}
   * pruning intact), and the per-row mapping is the compiled projection.
   * Only the posting stage repartitions (the analog of the reference's
   * AddRandomKey fan-out).
+  *
+  * Delivery is ONE pass, as in the reference's single Beam pass per
+  * bundle (`MapEvents` tags ok rows and transform errors, the sink
+  * emits the API DLQ, counters are metrics on the same pass —
+  * `M/main.py:145-162,274-277,377-400`): [[deliver]] posts the ok rows,
+  * passes the transform-DLQ rows through, collects the API-DLQ rows and
+  * fills the counters in one job; both DLQ channels are filters over
+  * its checkpoint. [[StreamingPipeline.sinkStream]] runs the same
+  * function per micro-batch.
   *
   * Routing runs driver-side below [[DistributedRouteThreshold]] (a few
   * thousand string prefix tests are cheaper than a job) and as a
@@ -44,24 +53,29 @@ object BatchPipeline {
     *    config (`read_error_<config_id>`);
     *  - `transform`: per-config [[Observation]] carrying `n_rows`,
     *    `n_dlq`, `missing_distinct_id`, `ts_parse_errors` — filled by
-    *    the first action on the transform output (zero extra passes).
+    *    the delivery pass (zero extra passes).
     */
   final case class BatchCounters(
       routed: Map[String, Long],
       unmatchedUris: Long,
       readErrors: Map[String, Long],
       transform: Map[String, Observation]) {
-    /** Transform-stage counters for one config; blocks until the first
-      * action on the transform output has run. */
+    /** Transform-stage counters for one config; blocks until the pass
+      * that carries the observation has run. */
     def transformMetrics(configId: String): Map[String, Long] =
-      transform.get(configId).map(_.get.map { case (k, v) =>
-        k -> v.asInstanceOf[Number].longValue
-      }).getOrElse(Map.empty)
+      transform.get(configId).map(counterValues).getOrElse(Map.empty)
   }
 
+  /** An observation's counters as longs. Blocks until it is filled. */
+  private[pipeline] def counterValues(obs: Observation): Map[String, Long] =
+    obs.get.map { case (k, v) => k -> v.asInstanceOf[Number].longValue }
+
   /** The three output channels (§2.8, §2.2) plus the run's counters.
-    * `apiDlq` from [[run]] is eagerly materialized (delivery already
-    * happened); from [[post]] it is lazy — see [[post]]'s contract.
+    * `transformDlq` and `apiDlq` from [[run]] are filters over the
+    * delivery pass's checkpoint: delivery already happened, and any
+    * number of actions on them neither re-posts nor re-scans the input.
+    * `eventsJson` is the lazy per-config event JSON, which [[run]] never
+    * evaluates (an action on it scans and maps again, but never posts).
     * `imported` is the URI set the run actually transformed (routed,
     * PARQUET, passed the corrupt check) — the ONLY set a processed-file
     * ledger may record: unmatched and corrupt-skipped files must stay
@@ -163,6 +177,11 @@ object BatchPipeline {
       }.toMap)
   }
 
+  /** Escape Hadoop glob metacharacters so a literal file-name prefix
+    * embeds safely in a glob pattern. */
+  private def globEscape(s: String): String =
+    s.flatMap(c => if ("*?[]{}\\".contains(c)) s"\\$c" else c.toString)
+
   /** Transform stage with NO driver-side file list at all — the shape
     * for lakes past [[routeUriFrame]]'s collect (10⁷-10⁸ objects,
     * where even the routed path list is a driver-memory hazard). Each
@@ -186,11 +205,6 @@ object BatchPipeline {
     *
     * Returns the same (json, dlq, observations) shape as
     * [[transformObserved]]. */
-  /** Escape Hadoop glob metacharacters so a literal file-name prefix
-    * embeds safely in a glob pattern. */
-  private def globEscape(s: String): String =
-    s.flatMap(c => if ("*?[]{}\\".contains(c)) s"\\$c" else c.toString)
-
   def transformPrefixScans(spark: SparkSession, configs: Seq[SourceConfig],
       opts: ConfigCompiler.Options = ConfigCompiler.Options())
       : (DataFrame, DataFrame, Map[String, Observation]) = {
@@ -221,22 +235,14 @@ object BatchPipeline {
         Router.firstMatchExpr(
           Router.normalizeFileUri(input_file_name()), configs)
           === cfg.configId)
-      val compiled = ConfigCompiler.compile(cfg, routedRows, opts)
-      val obs = Observation()
-      val ok = compiled.okObserved(obs)
-      (ok.select(to_json(struct(col("event"), col("properties")))
-        .as("event_json")), compiled.dlq, cfg.configId -> obs)
+      cfg.configId -> ConfigCompiler.compile(cfg, routedRows, opts)
     }
-    (parts.map(_._1).reduceOption(_ union _).getOrElse(emptyJson(spark)),
-      parts.map(_._2).reduceOption(_ union _).getOrElse(emptyDlq(spark)),
-      parts.map(_._3).toMap)
+    observed(spark, parts)
   }
 
   /** Build the transform stage: per-config compiled mapping over one
     * vectorized scan each; event JSON + transform-DLQ frames unioned
-    * across configs (both have config-independent schemas). Each
-    * config's frame carries an [[Observation]] with the A3 transform
-    * counters. */
+    * across configs (both have config-independent schemas). */
   def transform(spark: SparkSession, routed: Map[SourceConfig, Seq[String]],
       opts: ConfigCompiler.Options = ConfigCompiler.Options())
       : (DataFrame, DataFrame) = {
@@ -244,11 +250,20 @@ object BatchPipeline {
     (json, dlq)
   }
 
+  /** [[transform]] plus, per config, an [[Observation]] with the A3
+    * transform counters, filled by the first action on the JSON frame. */
   def transformObserved(spark: SparkSession,
       routed: Map[SourceConfig, Seq[String]],
       opts: ConfigCompiler.Options = ConfigCompiler.Options())
-      : (DataFrame, DataFrame, Map[String, Observation]) = {
-    val parts = routed.toSeq.sortBy(_._1.configId)
+      : (DataFrame, DataFrame, Map[String, Observation]) =
+    observed(spark, compileRouted(spark, routed, opts))
+
+  /** Each routed config's compiled mapping over ONE vectorized scan of
+    * its files, keyed and ordered by config id. */
+  private def compileRouted(spark: SparkSession,
+      routed: Map[SourceConfig, Seq[String]], opts: ConfigCompiler.Options)
+      : Seq[(String, CompiledEvents)] =
+    routed.toSeq.sortBy(_._1.configId)
       .filter(_._2.nonEmpty).map { case (cfg, paths) =>
         val input = spark.read
           // corrupt-file isolation at the scan too (S6): a file that
@@ -256,45 +271,98 @@ object BatchPipeline {
           // the whole config (`M/main_batch.py:100-103`)
           .option("ignoreCorruptFiles", "true")
           .parquet(paths: _*)
-        val compiled = ConfigCompiler.compile(cfg, input, opts)
-        val obs = Observation()
-        val ok = compiled.okObserved(obs)
-        (ok.select(to_json(struct(col("event"), col("properties")))
-          .as("event_json")), compiled.dlq, cfg.configId -> obs)
+        cfg.configId -> ConfigCompiler.compile(cfg, input, opts)
       }
-    (parts.map(_._1).reduceOption(_ union _).getOrElse(emptyJson(spark)),
-      parts.map(_._2).reduceOption(_ union _).getOrElse(emptyDlq(spark)),
-      parts.map(_._3).toMap)
+
+  /** Event JSON + transform-DLQ frames unioned across configs, each
+    * config's JSON frame carrying its own counters [[Observation]]. */
+  private def observed(spark: SparkSession, parts: Seq[(String, CompiledEvents)])
+      : (DataFrame, DataFrame, Map[String, Observation]) = {
+    val obs = parts.map { case (id, _) => id -> Observation() }
+    (unionOr(parts.zip(obs).map { case ((_, c), (_, o)) =>
+      c.okObserved(o).select(EventJson.as("event_json")) }, emptyJson(spark)),
+      unionOr(parts.map(_._2.dlq), emptyDlq(spark)),
+      obs.toMap)
   }
 
-  /** Posting stage: distributed batched/retrying sink; returns the API
-    * DLQ as a DataFrame. `parallelism` is the analog of the reference's
-    * 5000-key fan-out (`M/main.py:296-303`) — size it to the cluster,
-    * not to 5000.
+  /** The wire format of one event (`M/main.py:278-284`). */
+  private val EventJson = to_json(struct(col("event"), col("properties")))
+
+  /** Channel tags of [[deliver]]'s output rows. */
+  private val TransformDlqChannel = 1
+  private val ApiDlqChannel = 2
+
+  /** One config's compiled frame in the config-independent row shape
+    * [[deliver]] consumes: `event_json` for an ok row, else null and the
+    * four transform-DLQ fields. `obs` collects the config's A3 counters
+    * on the delivery pass itself. */
+  private[pipeline] def deliveryRows(compiled: CompiledEvents,
+      obs: Observation): DataFrame =
+    compiled.df
+      .observe(obs, CompiledEvents.counterAggs.head,
+        CompiledEvents.counterAggs.tail: _*)
+      .select(when(col("error").isNull, EventJson).as("event_json"),
+        col("error.error_type"), col("error.config_id"),
+        col("error.source_field"), col("error.original_row"))
+
+  /** The delivery pass — the only place events are posted, for both
+    * pipelines. ONE `mapPartitions` over `rows` (see [[deliveryRows]])
+    * feeds every ok row to a partition-local [[EventBatchSink]] and
+    * passes every transform-DLQ row through; its output, tagged by
+    * channel, is materialized once with `localCheckpoint(eager = true)`.
+    * That single job posts, fills every observation on `rows` and stores
+    * both DLQ channels. Returns `(transformDlq, apiDlq)`: filters over
+    * the checkpoint, with the columns `error_type, config_id,
+    * source_field, original_row` and `reason, response, payload`. Any
+    * number of actions on them neither re-posts nor re-scans.
     *
-    * CONTRACT: evaluation == delivery. The returned frame is lazy; the
-    * first action on it performs the HTTP posting, and re-evaluating it
-    * would re-post every event. [[run]] therefore materializes it
-    * exactly once via `localCheckpoint` and hands out only the
-    * truncated frame; call sites using [[post]] directly must do the
-    * same (or consume it with a single action). */
-  def post(eventsJson: DataFrame, posterFactory: () => EventPoster,
-      parallelism: Int = 0): DataFrame = {
-    val spark = eventsJson.sparkSession
+    * Delivery is AT-LEAST-ONCE: a task retry re-posts the batches its
+    * failed attempt already sent, and a lost checkpoint block fails the
+    * action that reads it (a streaming micro-batch then replays from the
+    * stream checkpoint and re-posts). The import endpoint dedups on
+    * `$insert_id` (`M/main.py:272-273`). `parallelism` is the analog of
+    * the reference's 5000-key fan-out (`M/main.py:296-303`) — size it to
+    * the cluster, not to 5000; 0 keeps the input partitioning. */
+  def deliver(rows: DataFrame, posterFactory: () => EventPoster,
+      parallelism: Int = 0): (DataFrame, DataFrame) = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val fanned =
-      if (parallelism > 0) eventsJson.repartition(parallelism) else eventsJson
-    fanned.select(col("event_json")).as[String].mapPartitions { it =>
-      val sink = new EventBatchSink(posterFactory())
-      val dlq = it.flatMap(e => sink.add(e)) ++ sink.flush()
-      dlq.map(d => (d.reason, d.response, d.payload))
-    }.toDF("reason", "response", "payload")
+    val fanned = if (parallelism > 0) rows.repartition(parallelism) else rows
+    val tagged = fanned.as[(String, String, String, String, String)]
+      .mapPartitions { it =>
+        val sink = new EventBatchSink(posterFactory())
+        def api(d: SinkDlqRecord) =
+          (ApiDlqChannel, d.reason, d.response, d.payload, null: String)
+        it.flatMap { case (json, errorType, configId, field, row) =>
+          if (json != null) sink.add(json).map(api)
+          else Seq((TransformDlqChannel, errorType, configId, field, row))
+        } ++ sink.flush().map(api)
+      }
+      .toDF("channel", "c1", "c2", "c3", "c4")
+      .localCheckpoint(eager = true)
+    def channel(tag: Int, names: String*): DataFrame =
+      tagged.filter(col("channel") === tag).select(names.zipWithIndex.map {
+        case (n, i) => col(s"c${i + 1}").as(n) }: _*)
+    (channel(TransformDlqChannel,
+      "error_type", "config_id", "source_field", "original_row"),
+      channel(ApiDlqChannel, "reason", "response", "payload"))
   }
 
-  /** Full pipeline: route -> corrupt-isolate -> transform -> post.
-    * Posting executes eagerly in here, exactly once; `Result.apiDlq` is
-    * the lineage-truncated DLQ (safe to re-use, never re-posts). All
-    * counters are complete when this returns. */
+  /** Posting only: [[deliver]] over rows that are all ok events (an
+    * `event_json` column). Posts now, exactly once, and returns the
+    * checkpointed API DLQ (`reason, response, payload`) — safe to re-use,
+    * never re-posts. */
+  def post(eventsJson: DataFrame, posterFactory: () => EventPoster,
+      parallelism: Int = 0): DataFrame =
+    deliver(eventsJson.select(col("event_json") +:
+      Seq.fill(4)(lit(null).cast("string")): _*),
+      posterFactory, parallelism)._2
+
+  /** Full pipeline: route -> corrupt-isolate -> transform -> deliver.
+    * Every config's compiled frame goes through ONE [[deliver]] pass:
+    * the input is scanned once, posting executes in here exactly once,
+    * and both DLQ channels and all counters are complete when this
+    * returns. */
   def run(spark: SparkSession, uris: Seq[String], configs: Seq[SourceConfig],
       posterFactory: () => EventPoster,
       opts: ConfigCompiler.Options = ConfigCompiler.Options(),
@@ -313,15 +381,19 @@ object BatchPipeline {
         (r, firstCounts, (uris.size - firstMatches.size).toLong)
       }
     val (readable, readErrors) = isolateCorrupt(spark, routed)
-    val (json, dlq, obs) = transformObserved(spark, readable, opts)
-    // Evaluation == delivery: run the posting job now, once, and
-    // truncate its lineage so downstream reuse cannot re-post.
-    val apiDlq = post(json, posterFactory, postParallelism)
-      .localCheckpoint(true)
-    Result(json, dlq, apiDlq,
-      BatchCounters(matchedCounts, unmatched, readErrors, obs),
+    val parts = compileRouted(spark, readable, opts)
+    val obs = parts.map { case (id, _) => id -> Observation() }.toMap
+    val (transformDlq, apiDlq) = deliver(
+      unionOr(parts.map { case (id, c) => deliveryRows(c, obs(id)) },
+        emptyRows(spark)),
+      posterFactory, postParallelism)
+    Result(unionOr(parts.map(_._2.json), emptyJson(spark)), transformDlq,
+      apiDlq, BatchCounters(matchedCounts, unmatched, readErrors, obs),
       readable.values.flatten.toSeq)
   }
+
+  private def unionOr(frames: Seq[DataFrame], empty: => DataFrame): DataFrame =
+    frames.reduceOption(_ union _).getOrElse(empty)
 
   private def emptyJson(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -332,5 +404,12 @@ object BatchPipeline {
     import spark.implicits._
     spark.emptyDataset[(String, String, String, String)]
       .toDF("error_type", "config_id", "source_field", "original_row")
+  }
+
+  private def emptyRows(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    spark.emptyDataset[(String, String, String, String, String)]
+      .toDF("event_json", "error_type", "config_id", "source_field",
+        "original_row")
   }
 }

@@ -1,12 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
 
-import graft.compile.ConfigCompiler
+import graft.compile.{CompiledEvents, ConfigCompiler}
 import graft.config.SourceConfig
 import graft.sink.EventPoster
 
@@ -23,9 +23,10 @@ import graft.sink.EventPoster
   *  - The 10 s window + AddRandomKey + GroupByKey micro-batching
   *    (`M/main.py:506-508`) is the micro-batch trigger itself:
   *    `Trigger.ProcessingTime("10 seconds")` + `foreachBatch`.
-  *  - Posting + DLQs run inside `foreachBatch` via [[BatchPipeline.post]]
-  *    — no bundle/window re-windowing workaround needed (the
-  *    reference's `# FIX` sites, `M/main.py:341-344,415-423`).
+  *  - Posting, DLQs and counters run inside `foreachBatch` as ONE
+  *    [[BatchPipeline.deliver]] pass per micro-batch — no bundle/window
+  *    re-windowing workaround needed (the reference's `# FIX` sites,
+  *    `M/main.py:341-344,415-423`).
   */
 object StreamingPipeline {
 
@@ -89,19 +90,23 @@ object StreamingPipeline {
     * via foreachBatch. DLQ frames are handed to the caller's writers so
     * tests can collect and production can append to storage (K2/K3 are
     * pluggable topics in the reference, `M/main.py:497-502,519-523`).
-    * Posting is materialized inside the callback; delivery is
-    * AT-LEAST-ONCE (a lost persist() block or a replayed micro-batch
-    * re-posts — downstream dedup is `$insert_id`, same posture as the
-    * reference, `M/main.py:272-273`). `writeApiDlq` receives an
-    * already-delivered, cached DLQ frame and must consume it
-    * synchronously (it is unpersisted when the writer returns).
+    *
+    * Each micro-batch runs ONE job: [[BatchPipeline.deliver]] posts the
+    * ok rows, passes the transform-DLQ rows through and collects the
+    * API-DLQ rows, materialized once with `localCheckpoint`. Both
+    * writers then receive filters over that checkpoint, so a writer may
+    * run any number of actions (or none) without re-posting or
+    * re-scanning, and delivery never depends on the writers. Delivery is
+    * AT-LEAST-ONCE: a task retry re-posts its batches, and a lost
+    * checkpoint block fails the micro-batch, which replays from the
+    * stream checkpoint and re-posts — downstream dedup is `$insert_id`,
+    * same posture as the reference (`M/main.py:272-273`).
     *
     * `onCounters` receives the A3 transform counters of every
     * micro-batch (`n_rows`/`n_dlq`/`missing_distinct_id`/
     * `ts_parse_errors`, `M/main.py:145,274-277`) — the streaming twin
-    * of `BatchPipeline.BatchCounters.transform`. Computed with one
-    * extra aggregation job per micro-batch over the (small) batch
-    * frame; pass the default no-op to skip it. */
+    * of `BatchPipeline.BatchCounters.transform`, read from an
+    * [[Observation]] on the same pass, with no extra job. */
   def sinkStream(compiled: DataFrame, posterFactory: () => EventPoster,
       writeTransformDlq: DataFrame => Unit,
       writeApiDlq: DataFrame => Unit,
@@ -111,33 +116,11 @@ object StreamingPipeline {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ok = batch.filter(col("error").isNull)
-          .select(to_json(struct(col("event"), col("properties")))
-            .as("event_json"))
-        writeTransformDlq(
-          batch.filter(col("error").isNotNull).select("error.*"))
-        // Evaluation == delivery for the posting frame — so it is
-        // materialized HERE, once per micro-batch in the normal case.
-        // Handing the lazy frame to `writeApiDlq` would make delivery
-        // depend on the callback's action count: a no-op writer (api
-        // DLQ unset) would silently never post, a two-action writer
-        // would post twice. The guarantee is AT-LEAST-ONCE, same as the
-        // reference's retrying HTTP poster (`M/main.py:350-368`):
-        // persist() is non-reliable storage, so on a cluster a lost or
-        // evicted cached partition makes the writer's action recompute
-        // the posting mapPartitions and re-post that partition's
-        // batches. The import endpoint dedups on insert_id, which is
-        // why the reference (and this engine) don't pay a reliable
-        // checkpoint per 10-second micro-batch to upgrade it.
-        val apiDlq = BatchPipeline.post(ok, posterFactory).persist()
-        try {
-          apiDlq.count() // the posting job; runs once, fills the cache
-          writeApiDlq(apiDlq)
-        } finally apiDlq.unpersist() // writer threw ⇒ still unpin the cache
-        if (batch.columns.contains("_counters")) {
-          val row = graft.compile.CompiledEvents(batch).counters.collect()(0)
-          onCounters(row.schema.fieldNames.map(n =>
-            n -> row.getAs[Number](n).longValue).toMap)
-        }
+        val obs = Observation()
+        val (transformDlq, apiDlq) = BatchPipeline.deliver(
+          BatchPipeline.deliveryRows(CompiledEvents(batch), obs), posterFactory)
+        writeTransformDlq(transformDlq)
+        writeApiDlq(apiDlq)
+        onCounters(BatchPipeline.counterValues(obs))
       }
 }

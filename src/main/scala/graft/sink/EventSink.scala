@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.GZIPOutputStream
 
@@ -63,7 +63,7 @@ final class EventBatchSink(
     * triggered a flush that dead-lettered. */
   def add(eventJson: String): Seq[SinkDlqRecord] = {
     buffer += eventJson
-    bufferBytes += eventJson.getBytes(UTF_8).length
+    bufferBytes += EventBatchSink.utf8Length(eventJson)
     if (buffer.size >= batchSizeEvents || bufferBytes >= batchSizeBytes) flush()
     else Nil
   }
@@ -71,26 +71,24 @@ final class EventBatchSink(
   /** Flush any buffered events; returns DLQ records for failures. */
   def flush(): Seq[SinkDlqRecord] = {
     if (buffer.isEmpty) return Nil
-    val payload = buffer.mkString("\n")
-    val gz = EventBatchSink.gzip(payload.getBytes(UTF_8))
-    val batchCopy = buffer.toVector
+    val gz = EventBatchSink.gzipLines(buffer, bufferBytes)
     var retries = 0
     var dlq = Vector.empty[SinkDlqRecord]
     var done = false
     while (!done && retries < maxRetries) {
       val attempt =
-        try Some(poster.post(gz, batchCopy.size))
+        try Some(poster.post(gz, buffer.size))
         catch { case scala.util.control.NonFatal(_) => None }
       attempt match {
         case Some(r) if r.status == 200 =>
-          sent += batchCopy.size
+          sent += buffer.size
           done = true
         case Some(r) if r.status == 429 || r.status >= 500 =>
           retries += 1
           backoff(retries)
         case Some(r) => // non-retryable client error: dead-letter the batch
-          dlq = batchCopy.map(e => SinkDlqRecord(
-            s"client_error_${r.status}", r.body.take(500), e))
+          dlq = buffer.iterator.map(e => SinkDlqRecord(
+            s"client_error_${r.status}", r.body.take(500), e)).toVector
           done = true
         case None =>
           retries += 1
@@ -98,7 +96,8 @@ final class EventBatchSink(
       }
     }
     if (!done && retries == maxRetries)
-      dlq = batchCopy.map(e => SinkDlqRecord("max_retries_reached", "", e))
+      dlq = buffer.iterator.map(e =>
+        SinkDlqRecord("max_retries_reached", "", e)).toVector
     buffer.clear()
     bufferBytes = 0
     dlq
@@ -113,6 +112,43 @@ object EventBatchSink {
   val DefaultBatchEvents = 2000
   /** `MP_BATCH_SIZE_BYTES` (`M/main.py:23`). */
   val DefaultBatchBytes: Long = 2L * 1024 * 1024
+
+  /** `s.getBytes(UTF_8).length` without encoding: 1-3 bytes per char,
+    * 4 per surrogate pair, and 1 for an unpaired surrogate (the encoder
+    * replaces it with `?`). */
+  def utf8Length(s: String): Long = {
+    var n = 0L
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      n += (
+        if (c < 0x80) 1
+        else if (c < 0x800) 2
+        else if (!Character.isSurrogate(c)) 3
+        else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+            Character.isLowSurrogate(s.charAt(i + 1))) { i += 1; 4 }
+        else 1)
+      i += 1
+    }
+    n
+  }
+
+  /** gzip of the newline-joined `lines`, encoded as UTF-8 straight into
+    * the compressor — the same bytes as `gzip(lines.mkString("\n")
+    * .getBytes(UTF_8))` with no joined-string or byte-array copy.
+    * `rawBytes` (their encoded size) sizes the output buffer. */
+  def gzipLines(lines: Iterable[String], rawBytes: Long): Array[Byte] = {
+    val bos = new ByteArrayOutputStream(math.max(64L, rawBytes / 4).toInt)
+    val out = new OutputStreamWriter(new GZIPOutputStream(bos, 8192), UTF_8)
+    var first = true
+    lines.foreach { l =>
+      if (!first) out.write('\n')
+      out.write(l)
+      first = false
+    }
+    out.close()
+    bos.toByteArray
+  }
 
   def gzip(bytes: Array[Byte]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()

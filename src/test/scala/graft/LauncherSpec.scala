@@ -111,11 +111,11 @@ class LauncherSpec extends SparkSpec {
       s"""[{"config_id": "a", "source_gcs_prefix": "$watch/a_",
          |  "file_type": "PARQUET", "mixpanel_event_name_from_field": "event_type",
          |  "field_mappings": [${mapping("ts_epoch", "time", "unix_timestamp_auto")},
-         |    ${mapping("uid", "$$user_id", "string")}]},
+         |    ${mapping("uid", "$user_id", "string")}]},
          | {"config_id": "b", "source_gcs_prefix": "$watch/b_",
          |  "file_type": "PARQUET", "mixpanel_event_name_from_field": "event_type",
          |  "field_mappings": [${mapping("ts_epoch", "time", "unix_timestamp_auto")},
-         |    ${mapping("uid", "$$user_id", "string")}]}]
+         |    ${mapping("uid", "$user_id", "string")}]}]
          |""".stripMargin
     // NOT inside the watch dir — the file streams would scan it
     val cfgPath = Files.createTempDirectory("graft_launch_cfg")
@@ -133,9 +133,13 @@ class LauncherSpec extends SparkSpec {
       .toOption.get
     assert(configs.map(_.configId) == Seq("a", "b"))
     PostedEvents.n.set(0)
+    // per-config sums of the counters every micro-batch surfaces
+    val counted = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     val qs = Launcher.startStreams(spark, args, configs,
       graft.compile.ConfigCompiler.Options(),
-      poster = Some(() => new EventCountingPoster))
+      poster = Some(() => new EventCountingPoster),
+      onCounters = (id, m) => m.foreach { case (k, v) =>
+        counted.merge(s"$id.$k", v, (x: Long, y: Long) => x + y) })
     assert(qs.size == 2)
     qs.foreach(_.processAllAvailable())
     // a late-arriving file is picked up by the already-running streams
@@ -156,6 +160,12 @@ class LauncherSpec extends SparkSpec {
     assert(dlq.count() == 1L)
     assert(dlq.select(col("error_type")).as[String].collect().toSeq ==
       Seq("missing_dynamic_event_name"))
+    // the transform counters reached the launcher's counters sink
+    assert(counted.asScala.toMap == Map(
+      "a.n_rows" -> 3L, "a.n_dlq" -> 0L,
+      "a.missing_distinct_id" -> 0L, "a.ts_parse_errors" -> 0L,
+      "b.n_rows" -> 2L, "b.n_dlq" -> 1L,
+      "b.missing_distinct_id" -> 0L, "b.ts_parse_errors" -> 0L))
   }
 
   test("streaming rate control: --max_files_per_trigger paces a file " +

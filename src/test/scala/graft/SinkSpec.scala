@@ -71,4 +71,25 @@ class SinkSpec extends SparkSpec {
     // 2^r + 0.5 for r = 1..5; the 60 s cap is above all of these
     assert(sleeps.toSeq == Seq(2500L, 4500L, 8500L, 16500L, 32500L))
   }
+
+  test("byte threshold counts UTF-8 bytes: multi-byte chars and surrogate pairs") {
+    // 2 + 3 + 4 bytes: é, €, and U+1F600 (a surrogate pair)
+    val unit = "\u00e9\u20ac\ud83d\ude00"
+    val line = unit * 100 // 400 UTF-16 chars, 900 bytes
+    assert(line.getBytes(UTF_8).length == 900)
+    // two lines flush at 1800 bytes but not at 1801: counted exactly 900
+    val (exact, atLimit, _) = sinkWith(Nil, batchEvents = 1000, batchBytes = 1800)
+    val (above, belowLimit, _) = sinkWith(Nil, batchEvents = 1000, batchBytes = 1801)
+    Seq(exact, above).foreach { s => s.add(line); s.add(line) }
+    assert(atLimit.batches.map(_._1).toSeq == Seq(2))
+    assert(belowLimit.batches.isEmpty)
+    // an unpaired surrogate encodes as the 1-byte '?', and the payload
+    // is exactly the joined lines' UTF-8
+    val odd = Seq("a\ud83d", "\ude00b", unit)
+    assert(odd.map(EventBatchSink.utf8Length) == odd.map(_.getBytes(UTF_8).length.toLong))
+    odd.foreach(exact.add)
+    exact.flush()
+    assert(EventBatchSink.gunzip(atLimit.batches(1)._2).toSeq ==
+      odd.mkString("\n").getBytes(UTF_8).toSeq)
+  }
 }
