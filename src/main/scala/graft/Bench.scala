@@ -6,8 +6,9 @@ import java.util.concurrent.atomic.LongAdder
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd, SparkListenerTaskStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-query task-metric aggregation: separates "the engine did more
   * work" (task time, GC, spill, shuffle volume) from "the box was
@@ -45,8 +46,18 @@ final class BenchListener extends SparkListener {
     * wedge kill bounded the query: a sub-second relaunch means the
     * stage moved on while the zombie burned CPU off to the side. */
   val relaunchMsMax = new java.util.concurrent.atomic.AtomicLong(0)
-  private val stageNames =
+  /** Per-stage attribution (stage id -> summed task CPU ns, tasks,
+    * callsite), so a query's CPU names the operator that spent it. */
+  private val stageCpuNs =
+    new java.util.concurrent.ConcurrentHashMap[Int, LongAdder]()
+  private val stageTasks =
+    new java.util.concurrent.ConcurrentHashMap[Int, LongAdder]()
+  private val callsites =
     new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  private val stageExecution =
+    new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+  private val executionFrames =
+    new java.util.concurrent.ConcurrentHashMap[Long, String]()
 
   def reset(): Unit = {
     Seq(taskTimeMs, taskCpuNs, gcTimeMs, spillBytes,
@@ -56,11 +67,49 @@ final class BenchListener extends SparkListener {
     running.clear()
     killedTasks.clear()
     relaunchMsMax.set(0)
+    stageCpuNs.clear()
+    stageTasks.clear()
+    callsites.clear()
+    stageExecution.clear()
+    executionFrames.clear()
   }
 
-  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-    stageNames.put(e.stageInfo.stageId,
-      e.stageInfo.name.takeWhile(_ != '\n').take(80))
+  /** Stages that ran tasks since the last [[reset]], most CPU first. */
+  def stageCosts: Seq[BenchListener.StageCost] =
+    stageCpuNs.asScala.toSeq.map { case (sid, cpu) =>
+      BenchListener.StageCost(sid, cpu.sum, stageTasks.get(sid).sum,
+        callsites.getOrDefault(sid, "?"))
+    }.sortBy(c => (-c.cpuNs, c.stageId))
+
+  /** A stage's callsite: its operators (the SQL scopes of its RDDs, in
+    * pipeline order) and its innermost three `graft.*` frames — from the
+    * stage's own submitting stack, else from its SQL execution's action
+    * (AQE submits shuffle stages from a pool thread). [[Bench]]'s own
+    * frames count only when no other `graft.*` frame is on the stack. */
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+    val info = e.stageInfo
+    val ops = info.rddInfos.sortBy(_.id)
+      .flatMap(_.scope.flatMap(s => BenchListener.ScopeName
+        .findFirstMatchIn(s.toString).map(_.group(1).trim)))
+      .distinct.mkString(" > ")
+    val frames = Some(BenchListener.graftFrames(info.details))
+      .filter(_.nonEmpty)
+      .orElse(Option(stageExecution.get(info.stageId))
+        .flatMap(id => Option(executionFrames.get(id))))
+      .getOrElse("")
+    callsites.put(info.stageId, s"[$ops] $frames".take(300))
+  }
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .foreach(id => e.stageIds.foreach(stageExecution.put(_, id.toLong)))
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      executionFrames.put(s.executionId, BenchListener.graftFrames(s.details))
+    case _ => ()
+  }
 
   override def onTaskStart(e: SparkListenerTaskStart): Unit =
     running.put(e.taskInfo.taskId,
@@ -83,9 +132,12 @@ final class BenchListener extends SparkListener {
       shuffleReadBytes.add(m.shuffleReadMetrics.totalBytesRead)
       shuffleWriteBytes.add(m.shuffleWriteMetrics.bytesWritten)
       tasks.add(1)
+      stageCpuNs.computeIfAbsent(e.stageId, _ => new LongAdder)
+        .add(m.executorCpuTime)
+      stageTasks.computeIfAbsent(e.stageId, _ => new LongAdder).add(1)
       if (m.executorRunTime >= BenchListener.SlowTaskMs)
         slowTasks.add(s"stage ${e.stageId} " +
-          s"(${stageNames.getOrDefault(e.stageId, "?")}) " +
+          s"(${callsites.getOrDefault(e.stageId, "?")}) " +
           s"task ${e.taskInfo.index}: run=${m.executorRunTime / 1000}s " +
           s"cpu=${m.executorCpuTime / 1000000000L}s " +
           s"gc=${m.jvmGCTime / 1000}s")
@@ -95,9 +147,27 @@ final class BenchListener extends SparkListener {
 
 object BenchListener {
   val SlowTaskMs = 5000L
+
+  final case class StageCost(stageId: Int, cpuNs: Long, tasks: Long,
+      callsite: String)
+
+  /** The operator name in an RDD scope's JSON form. */
+  private val ScopeName = "\"name\":\"([^\"]*)\"".r
+
+  /** The innermost three `graft.*` frames of a call-site stack, joined
+    * outward; Bench's own frames only if they are all there is. */
+  private def graftFrames(stack: String): String = {
+    val graft = stack.linesIterator.map(_.trim.stripPrefix("at "))
+      .filter(_.contains("graft.")).toSeq
+    val own = graft.filterNot(_.contains("graft.Bench$"))
+    (if (own.nonEmpty) own else graft).take(3).mkString(" <- ")
+  }
 }
 
 object Bench {
+
+  /** Stages per query printed to stderr by CPU (`[bench-stage]`). */
+  private val TopStages = 5
 
   /** Pull every input byte through the OS page cache before timing:
     * the first query over a cold file otherwise pays the physical read
@@ -177,34 +247,19 @@ object Bench {
     // task time on the shuffle-heavy gates (stream_graph_append
     // 96.9→87.9 task-s, stream_incremental_dedup 126.0→115.2,
     // embed_dbscan 178.4→165.3) and ~0 on CPU-bound ones — real but
-    // NOT the 32-core collapse cause (see the partition-sizing notes
-    // below). minTaskRuntime keeps speculation armed strictly for the
-    // wedge it was added for (tasks that normally finish in ms
-    // running 20 s+), and the 45 s watchdog kill below stays as the
-    // backstop. Env-overridable for A/B diagnosis.
-    val specMinRuntime =
-      sys.env.getOrElse("SPARK_GRAFT_SPEC_MIN_RUNTIME", "20s")
+    // NOT the 32-core collapse cause (round 19 put that on VM
+    // memory-bandwidth/scheduling contention; AQE size-based
+    // coalescing measured worse and stays off). minTaskRuntime keeps
+    // speculation armed strictly for the wedge it was added for
+    // (tasks that normally finish in ms running 20 s+), and the 45 s
+    // watchdog kill below stays as the backstop.
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.speculation",
-        sys.env.getOrElse("SPARK_GRAFT_SPECULATION", "true"))
-      .config("spark.speculation.interval",
-        sys.env.getOrElse("SPARK_GRAFT_SPEC_INTERVAL", "2s"))
+      .config("spark.speculation", "true")
+      .config("spark.speculation.interval", "2s")
       .config("spark.speculation.multiplier", "4")
       .config("spark.speculation.quantile", "0.75")
-      .config("spark.speculation.minTaskRuntime", specMinRuntime)
+      .config("spark.speculation.minTaskRuntime", "20s")
       .config("spark.speculation.task.duration.threshold", "30s")
-      // Diagnosis knobs for the 32-core efficiency question (r18
-      // verdict item 1): override the engine's partition sizing to
-      // attribute the c32-vs-c8 CPU gap between "too many tiny
-      // partitions" and memory-bandwidth contention. Defaults are
-      // the engine's own settings — the driver's bench is unchanged.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST",
-          Sessions.AqeParallelismFirst))
-      .config("spark.default.parallelism",
-        sys.env.getOrElse("SPARK_GRAFT_DEFAULT_PARALLELISM", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Sessions.warm(spark)
@@ -225,8 +280,7 @@ object Bench {
     // method-global (code-cache eviction would wedge the retry too) —
     // and bounds the damage to any single bench query.
     val wedgeDumpMs = 20000L
-    val wedgeKillMs =
-      sys.env.getOrElse("SPARK_GRAFT_WEDGE_KILL_MS", "45000").toLong
+    val wedgeKillMs = 45000L
     val currentQuery = new java.util.concurrent.atomic.AtomicReference("")
     val wedgeEvents = new java.util.concurrent.ConcurrentHashMap[String, LongAdder]()
     val killEvents = new java.util.concurrent.ConcurrentHashMap[String, LongAdder]()
@@ -247,7 +301,7 @@ object Bench {
               s"query=${currentQuery.get} stage=$stage part=$idx tid=$tid age_s=${age / 1000}")
             wedgeEvents.computeIfAbsent(currentQuery.get, _ => new LongAdder).increment()
           }
-          if (wedgeKillMs > 0 && age >= wedgeKillMs && !killed.contains(tid)) {
+          if (age >= wedgeKillMs && !killed.contains(tid)) {
             killed.add(tid)
             // register BEFORE the kill so the relaunch (same
             // stage+partition, new tid) is attributed even if it
@@ -286,7 +340,7 @@ object Bench {
     // ACCEPTED windows only, `steal_run_s` keeps the whole-run
     // envelope so the gating is transparent, and `retried` names the
     // re-measured queries.
-    val probeMs = sys.env.getOrElse("SPARK_GRAFT_STEAL_PROBE_MS", "8000").toLong
+    val probeMs = 8000L
     // ~1 tick/8 s: the launch bar the round-10..12 protocol converged on
     val quietBar = probeMs / 1000.0 * 0.02
     def awaitQuiet(maxWaitMs: Long, tag: String): Double = {
@@ -303,10 +357,8 @@ object Bench {
       }
       (System.currentTimeMillis() - t0) / 1e3
     }
-    val quietWaitS = awaitQuiet(
-      sys.env.getOrElse("SPARK_GRAFT_QUIET_MAX_MS", "480000").toLong, "pre-run")
-    var retryBudgetMs =
-      sys.env.getOrElse("SPARK_GRAFT_RETRY_BUDGET_MS", "480000").toLong
+    val quietWaitS = awaitQuiet(480000L, "pre-run")
+    var retryBudgetMs = 480000L
     val retried = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val stealRun0 = stealSeconds
     def runOnce(name: String,
@@ -351,6 +403,11 @@ object Bench {
       // straggler forensics to stderr (stdout carries only the JSON line)
       listener.slowTasks.asScala.foreach(s =>
         System.err.println(s"[bench-slow] $name: $s"))
+      // where the query's CPU went: its top stages and their callsites
+      listener.stageCosts.take(TopStages).foreach { c =>
+        System.err.println(f"[bench-stage] $name: s${c.stageId} " +
+          f"cpu=${c.cpuNs / 1e9}%.2fs tasks=${c.tasks} ${c.callsite}")
+      }
       // shared-frame tiers whose FIRST build ran inside this query's
       // window — the attribution that explains first-caller cost
       // swings as the board grows (verdict r15 secondary observation)

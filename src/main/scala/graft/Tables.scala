@@ -120,16 +120,6 @@ object Tables {
 
 /** Shared session tuning for entry points and tests. */
 object Sessions {
-  /** AQE small-partition coalescing policy
-    * (`spark.sql.adaptive.coalescePartitions.parallelismFirst`):
-    * `true` (the Spark default) coalesces post-shuffle partitions
-    * only down to the cluster's parallelism; `false` sizes them by
-    * `advisoryPartitionSizeInBytes` regardless of slot count. One
-    * constant so the r19 32-core efficiency diagnosis can A/B it
-    * (see Bench's env override) and the verdict can flip it in one
-    * place once measured. */
-  val AqeParallelismFirst = "true"
-
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -164,8 +154,10 @@ object Sessions {
       // schemas still normalize via the cast in [[Tables.normalize]].
       .config("spark.sql.parquet.inferTimestampNTZ", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      // post-shuffle coalescing stops at the cluster's parallelism
+      // (round 19: sizing by advisory bytes instead measured worse)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        AqeParallelismFirst)
+        "true")
       // Generated methods HotSpot won't JIT (-XX:-DontCompileHugeMethods
       // default refuses >8000 bytecodes) run INTERPRETED forever —
       // diagnosed as rare 30-50x single-task CPU wedges on the LSH

@@ -88,17 +88,24 @@ object BatchPipeline {
       counters: BatchCounters,
       imported: Seq[String])
 
-  /** Route a file list to configs driver-side (first-match-wins,
-    * PARQUET-only — P2+P3). Kept for small lists and tests; [[run]]
-    * switches to [[routeFilesDistributed]] past the threshold. */
+  /** Route a file list to configs driver-side: each URI's FIRST
+    * matching config, found once, gives both the per-config matched
+    * counts (before the parquet filter, like `matched_<id>`,
+    * `M/main.py:55-58`) and the routed PARQUET paths (P2+P3). Same
+    * (routed, matched, unmatched) triple as [[routeFilesDistributed]],
+    * which [[run]] switches to past the threshold. */
   def routeFiles(uris: Seq[String], configs: Seq[SourceConfig])
-      : Map[SourceConfig, Seq[String]] =
-    uris.flatMap { uri =>
-      configs.find(c => uri.startsWith(c.sourcePrefix)).map(_ -> uri)
+      : (Map[SourceConfig, Seq[String]], Map[String, Long], Long) = {
+    val firsts = uris.flatMap(u =>
+      configs.find(c => u.startsWith(c.sourcePrefix)).map(_ -> u))
+    val byCfg = firsts.groupBy(_._1)
+    val matched = configs.map(c =>
+      c.configId -> byCfg.get(c).fold(0L)(_.size.toLong)).toMap
+    val routed = byCfg.collect {
+      case (cfg, pairs) if cfg.isParquet => cfg -> pairs.map(_._2)
     }
-      .groupBy(_._1)
-      .collect { case (cfg, pairs) if cfg.isParquet => cfg -> pairs.map(_._2) }
-      .toMap
+    (routed, matched, (uris.size - firsts.size).toLong)
+  }
 
   /** Distributed routing: the prefix matching runs as a codegen'd
     * [[Router.route]] plan over a URI DataFrame, not a driver loop.
@@ -240,18 +247,11 @@ object BatchPipeline {
     observed(spark, parts)
   }
 
-  /** Build the transform stage: per-config compiled mapping over one
+  /** The transform stage: per-config compiled mapping over one
     * vectorized scan each; event JSON + transform-DLQ frames unioned
-    * across configs (both have config-independent schemas). */
-  def transform(spark: SparkSession, routed: Map[SourceConfig, Seq[String]],
-      opts: ConfigCompiler.Options = ConfigCompiler.Options())
-      : (DataFrame, DataFrame) = {
-    val (json, dlq, _) = transformObserved(spark, routed, opts)
-    (json, dlq)
-  }
-
-  /** [[transform]] plus, per config, an [[Observation]] with the A3
-    * transform counters, filled by the first action on the JSON frame. */
+    * across configs (both have config-independent schemas), plus, per
+    * config, an [[Observation]] with the A3 transform counters, filled
+    * by the first action on the JSON frame. */
   def transformObserved(spark: SparkSession,
       routed: Map[SourceConfig, Seq[String]],
       opts: ConfigCompiler.Options = ConfigCompiler.Options())
@@ -370,16 +370,7 @@ object BatchPipeline {
     val (routed, matchedCounts, unmatched) =
       if (uris.size > DistributedRouteThreshold)
         routeFilesDistributed(spark, uris, configs)
-      else {
-        val r = routeFiles(uris, configs)
-        // first-match-wins counting: a URI counts for the FIRST config
-        // whose prefix matches, mirroring `matched_<id>` (`M/main.py:55-58`)
-        val firstMatches = uris.flatMap(u =>
-          configs.find(c => u.startsWith(c.sourcePrefix)).map(_.configId))
-        val firstCounts = configs.map(c => c.configId ->
-          firstMatches.count(_ == c.configId).toLong).toMap
-        (r, firstCounts, (uris.size - firstMatches.size).toLong)
-      }
+      else routeFiles(uris, configs)
     val (readable, readErrors) = isolateCorrupt(spark, routed)
     val parts = compileRouted(spark, readable, opts)
     val obs = parts.map { case (id, _) => id -> Observation() }.toMap

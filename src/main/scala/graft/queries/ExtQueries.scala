@@ -154,10 +154,10 @@ object ExtQueries {
     * rides a fixture artifact: the gate's queries (vec_id < 10) are
     * THEMSELVES seed centroids, so seed cells are query-centered
     * (near-zero residual and an exact coarse term for each query's
-    * own cell). [[graft.tools.ResidualAb]] re-runs the same A/B over
-    * query bands that are NOT seed ids: trained wins every band
-    * (45/48/49 vs seed's 38/39/37 hits of 100 at bands 100/200/300) —
-    * the Lloyd's rounds buy ~+25% relative recall for the residual
+    * own cell). Round 14 re-ran the same A/B over query bands that
+    * are NOT seed ids: trained won every band (45/48/49 vs seed's
+    * 38/39/37 hits of 100 at bands 100/200/300) — the Lloyd's rounds
+    * buy ~+25% relative recall for the residual
     * layout on honest queries, even on this near-uniform corpus. */
   def annIvfPqTrained(spark: SparkSession, dir: String): DataFrame =
     pqTrainedResidualTopK(spark, dir)
@@ -171,8 +171,8 @@ object ExtQueries {
     * compression loss; the trained−seed gap is what the Lloyd's
     * rounds buy the residual layout — on THIS gate's query band it
     * reads inverted because the queries double as seed centroids (see
-    * [[annIvfPqTrained]]'s scaladoc and [[graft.tools.ResidualAb]],
-    * which shows trained > seed on every off-seed band). One
+    * [[annIvfPqTrained]]'s scaladoc: round 14 measured trained > seed
+    * on every off-seed band). One
     * brute-force truth set, three candidate stacks. */
   def annResidualRecallAudit(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir, "embeddings")
@@ -225,7 +225,7 @@ object ExtQueries {
     * [0, 64) ∩ 4ℤ). Each stack is the SAME persisted frame its own
     * gate serves, sliced at the off-seed band (training ran once for
     * both bands). On honest queries the Lloyd's rounds win: trained ≥
-    * seed here, matching [[graft.tools.ResidualAb]]'s off-gate sweep
+    * seed here, matching round 14's off-gate sweep
     * (45/48/49 vs 38/39/37 of 100 at bands 100/200/300) — the
     * seed-band gate stays as the documented fixture-artifact
     * demonstration. */
@@ -334,8 +334,8 @@ object ExtQueries {
     * recall while the diversify audit had already measured 0.79 from
     * the same slots) — 8 STRATIFIED entries (one per ⌈n/8⌉ block of
     * the id order; the smallest-8 convention through round 15 was
-    * measured by [[graft.tools.GraphServeAb]] to be the walk's
-    * ceiling), beam 16, 3 hops, top-10 out — for the off-seed query
+    * measured by round 16's serving-entry A/B to be the walk's
+    * ceiling: self_found 0.86 → 1.00 with stratified entries), beam 16, 3 hops, top-10 out — for the off-seed query
     * band [100, 110) (disjoint from the entry set at every SF:
     * stride ≥ n/8 ≥ 62 > 110's first stratum, so every hit is a
     * genuine graph walk). Per-query serving cost is beam·degree per
@@ -378,8 +378,9 @@ object ExtQueries {
       "hop1" -> walk(1), "hop2" -> walk(2), "hop3" -> walk(3)))
   }
 
-  /** Serving-ENTRY sweep — the knob round 16's `GraphServeAb` A/B
-    * surfaced as the real serving ceiling, recorded as a gated
+  /** Serving-ENTRY sweep — the knob round 16's serving-entry A/B
+    * surfaced as the real serving ceiling (walk_top10 0.494 → 0.658
+    * at the same 8-entry/3-hop budget), recorded as a gated
     * frontier: recall@10 of the same beam-16/3-hop walk over the
     * DEPLOYED serving store ([[servingGraph]]) at entries ∈
     * {4, 8, 16, 32} (stratified stride), off-seed query band. Entry
@@ -529,7 +530,7 @@ object ExtQueries {
     * adopts true orphans (the HNSW insert heuristic — zero on this
     * corpus, every insert already had 7-8 adopters, but the repair
     * guards the clustered case the spec pins), and (b)
-    * [[graft.tools.GraphServeAb]] attributed the actual miss to the
+    * round 16's serving-entry A/B attributed the actual miss to the
     * smallest-8 SERVING-entry convention — stratified entries at the
     * same 8-entry/3-hop budget lift self_found 0.86 → 1.00 and
     * walk_top10 0.494 → 0.658 (now the beam-search default).
@@ -1043,15 +1044,16 @@ object ExtQueries {
     * pq_opq 0.64 — the honest null (the corpus is near-uniform on
     * the sphere, so the reflection spreads noise, not signal). The
     * spec's anisotropic fixture proves the variance-SPREADING
-    * contract; [[graft.tools.OpqAnisoAb]] then tests whether the
+    * contract; round 14's anisotropic A/B then tested whether the
     * spread converts to an ADC-recall win on gain-scaled corpora and
-    * REFUTES it for this one-reflection form (raw ≥ opq at every
+    * REFUTED it for this one-reflection form (raw ≥ opq at every
     * gain: 65/54/47 vs 64/52/40 at g = 4/8/16) — for inner-product
     * ADC, concentrating a single dominant direction in one codebook
     * can beat balancing it across all m; full OPQ's recall win needs
     * the alternating rotation/codebook solve. That is why no
     * anisotropic recall GATE exists: it would record the same
-    * direction as this null, and the evidence lives in the tool. */
+    * direction as this null; round 14's SURVEY notes keep the
+    * numbers. */
   def annOpqRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 10)

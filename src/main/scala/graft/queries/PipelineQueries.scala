@@ -34,8 +34,8 @@ object PipelineQueries {
     val decoy = SourceConfig("decoy", s"$dir/lineitem", fileType = "CSV")
     val uris = Seq(s"$dir/events.parquet", s"$dir/lineitem.parquet",
       s"$dir/unmatched.parquet")
-    val routed = BatchPipeline.routeFiles(uris, Seq(cfg, decoy))
-    val (json, _) = BatchPipeline.transform(spark, routed)
+    val (routed, _, _) = BatchPipeline.routeFiles(uris, Seq(cfg, decoy))
+    val (json, _, _) = BatchPipeline.transformObserved(spark, routed)
     json
       .select(get_json_object(col("event_json"), "$.event").as("event"))
       .groupBy("event").agg(count(lit(1)).as("n"))

@@ -127,10 +127,13 @@ class CountersSpec extends SparkSpec {
     }
     val (routed, counts, unmatched) =
       BatchPipeline.routeFilesDistributed(spark, uris, cfgs)
-    val driverRouted = BatchPipeline.routeFiles(uris, cfgs)
+    val (driverRouted, driverCounts, driverUnmatched) =
+      BatchPipeline.routeFiles(uris, cfgs)
     assert(routed.map { case (c, ps) => c.configId -> ps.toSet } ==
       driverRouted.map { case (c, ps) => c.configId -> ps.toSet })
     assert(counts == Map("ca" -> 7500L, "cb" -> 7500L, "call" -> 7500L))
     assert(unmatched == 7500L)
+    assert(driverCounts == counts)
+    assert(driverUnmatched == unmatched)
   }
 }

@@ -69,7 +69,7 @@ class PipelineSpec extends SparkSpec {
 
   test("batch pipeline: unrouted and non-parquet files are dropped") {
     val dir = writeTempEvents()
-    val routed = BatchPipeline.routeFiles(
+    val (routed, _, _) = BatchPipeline.routeFiles(
       Seq(s"$dir/src/part.parquet", s"$dir/other/x.parquet"),
       Seq(cfgFor(dir), SourceConfig("csv", s"$dir/other/", fileType = "CSV")))
     assert(routed.keys.map(_.configId).toSet == Set("t"))
